@@ -1,7 +1,7 @@
 """Round-7 optimization harness — separate from the FROZEN bench.py.
 
 Sub-commands:
-  cdc [events] [base] [fpt]   profiled CDC replay (SPARK_GRAFT_PROFILE honored)
+  cdc [events] [base] [fpt]   timed CDC replay (per-layer times: perfbench/run.py --trace 1)
   queries [name ...]          noop-sink isolation timings for headline queries
   plans <outdir> [name ...]   dump .explain("formatted") per query
   scaleup [name ...]          timings at the x10 scaled corpus (same synth as bench.py)

@@ -1304,6 +1304,12 @@ def _run_cdc_streaming_job(spark: SparkSession, config: dict) -> dict[str, dict]
         sink   { LakeTable { root = "...", primary_keys = [repo, path],
                              checkpoint_dir = "..." } }
 
+    ``format``: 'parquet-events' (default, the native typed log) or a queue
+    format (sources.queue.WIRE_FORMATS). A 'parquet-events' log must give
+    every event a unique ``seq`` (its log offset): the merge drops its LWW
+    tie-break on that contract (CdcIngestJob docstring). Queue formats
+    order by envelope timestamp and keep the tie-break.
+
     availableNow semantics (StopMode LATEST): the call drains the current
     log and returns; rerunning resumes from the checkpoint."""
     from seatunnel_spark.schema import sqltype_to_spark

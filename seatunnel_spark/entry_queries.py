@@ -2905,9 +2905,10 @@ def ann_range_search(spark, sf_dir):
 )
 def s9_ddl_segments(spark, sf_dir):
     """Schema-change stream splitting as a batch-checkable head (SURVEY
-    S9, streaming/job.py:402-454): events between DDL offsets form
-    half-open segments (prev, next] — a DML with seq EQUAL to a DDL's seq
-    applies BEFORE that DDL, exactly the engine's bounds arithmetic.
+    S9): events between DDL offsets form half-open segments (prev, next] —
+    a DML with seq EQUAL to a DDL's seq applies BEFORE that DDL, the same
+    interval rule as the engine's seq-bounded wire bindings
+    (streaming.job.project_to_table_schema).
     Marker rows stand in for DDLs (every 5000th event_id). The marker set
     is aggregated to ONE sorted array row and broadcast — segment id =
     markers strictly below my seq — mirroring how the engine's metadata

@@ -128,24 +128,9 @@ def merge_into(
     pass already knows the batch's seq range and count. Either way the merge
     is exactly ONE Spark action — reduce + write.
     """
-    import os as _os
-    import sys as _sys
-    import time as _time
-    _prof = _os.environ.get("SPARK_GRAFT_PROFILE") == "1"
-    _t0 = _time.time()
-
-    def _mk(label):
-        nonlocal _t0
-        if _prof:
-            now = _time.time()
-            print(f"PROF merge[{epoch_id}] {label}: {now - _t0:.3f}s",
-                  file=_sys.stderr, flush=True)
-            _t0 = now
-
     table.refresh()
     if table.epoch_committed(epoch_id):
         return {"skipped": True, "epoch_id": epoch_id}
-    _mk("refresh+ledger")
 
     field_names = [f["name"] for f in table.schema_fields()]
     key = table.key
@@ -189,11 +174,9 @@ def merge_into(
             unique_order=unique_order,
         ).withColumnRenamed("op", "_op").withColumnRenamed("seq", "_seq")
 
-    _mk("plan_build")
     new_files = _write_bucketed(
         table, reduced, table.num_buckets, pre_partitioned=pre_partitioned
     )
-    _mk("write_job")
     affected = sorted(new_files)
 
     summary = {"operation": "merge-delta", "buckets_touched": len(affected)}
@@ -203,10 +186,8 @@ def merge_into(
     committed = table.commit_snapshot(
         new_files, epoch_id, summary, properties_update=properties_update, mode="append"
     )
-    _mk("commit")
 
     compacted = maybe_compact(spark, table, epoch_id, compact_threshold)
-    _mk("compact")
     return {
         "epoch_id": epoch_id,
         "skipped": not committed,

@@ -517,10 +517,20 @@ class LakeTable:
 
         return self._commit(mutate)
 
-    def update_schema(self, change: SchemaChange, epoch_id: str) -> bool:
+    def update_schema(
+        self, change: SchemaChange, epoch_id: str, seq: int | None = None
+    ) -> bool:
         """Apply a DDL event as a metadata-only commit (no data rewrite).
-        Reference semantics: AlterTableEventHandler.java:53-163; alignment
-        with data commits is the caller's job (DDL-offset sub-transactions).
+        Reference semantics: AlterTableEventHandler.java:53-163.
+
+        ``seq``: the DDL's log offset. An ``add_column`` given one records in
+        ``wire_bounds`` that the new column id reads its wire field only for
+        events with ``seq > s``, and, if the wire name was bound to another
+        id, that the old binding ends at ``seq <= s``. The stream projection
+        (streaming.job.project_to_table_schema) applies these intervals, so
+        a batch can commit all its DDLs first and then merge once, and a
+        replay that finds the DDLs already committed projects identically.
+        Without ``seq`` the binding is unbounded (the old id simply loses it).
 
         ``batch`` (reference AlterTableColumnsEvent.java) applies its column
         sub-changes in order under ONE epoch/schema version — all-or-nothing,
@@ -537,7 +547,17 @@ class LakeTable:
                 cid = meta["next_column_id"]
                 meta["next_column_id"] += 1
                 fields.append({"id": cid, "name": ch.name, "type": normalize_sql_type(ch.type)})
+                prev = meta["wire_bindings"].get(ch.name)
                 meta["wire_bindings"][ch.name] = cid
+                # wire_bounds: column id -> the (from, to] seq interval in
+                # which it reads its wire field; absent = always
+                bounds = meta.setdefault("wire_bounds", {})
+                if seq is None:
+                    bounds.pop(str(prev), None)
+                else:
+                    if prev is not None:
+                        bounds.setdefault(str(prev), {"wire": ch.name, "from": None})["to"] = seq
+                    bounds[str(cid)] = {"wire": ch.name, "from": seq, "to": None}
             elif ch.kind == "rename_column":
                 f = next(f for f in fields if f["name"] == ch.old_name)
                 f["name"] = ch.name

@@ -111,25 +111,19 @@ def lww_reduce(
     if strategy == "max_by":
         out = lww_dedup_agg(df, key, order_col)
         return out.repartition(bucket_partitions, *key) if bucket_partitions else out
-    if unique_order:
-        winners = df.groupBy(*key).agg(F.max(order_col).alias(order_col))
-        if broadcast_winners:
-            kept = df.join(F.broadcast(winners), [*key, order_col], "leftsemi")
-            return (
-                kept.repartition(bucket_partitions, *key) if bucket_partitions else kept
-            )
-        probe = df.repartition(bucket_partitions, *key) if bucket_partitions else df
-        return probe.join(winners.hint("shuffle_hash"), [*key, order_col], "leftsemi")
     payload = [c for c in df.columns if c not in key and c != order_col]
-    if not payload:  # (key, order) ties are full-row duplicates
+    if unique_order or not payload:
+        # no tie-break tag: ties are impossible (unique_order) or are
+        # full-row duplicates (no payload), which one distinct() collapses
         winners = df.groupBy(*key).agg(F.max(order_col).alias(order_col))
         if broadcast_winners:
             kept = df.join(F.broadcast(winners), [*key, order_col], "leftsemi")
             if bucket_partitions:
                 kept = kept.repartition(bucket_partitions, *key)
-            return kept.distinct()
-        probe = df.repartition(bucket_partitions, *key) if bucket_partitions else df
-        return probe.join(winners.hint("shuffle_hash"), [*key, order_col], "leftsemi").distinct()
+        else:
+            probe = df.repartition(bucket_partitions, *key) if bucket_partitions else df
+            kept = probe.join(winners.hint("shuffle_hash"), [*key, order_col], "leftsemi")
+        return kept if unique_order else kept.distinct()
     tagged = df.withColumn("_tb", F.xxhash64(*payload))
     winners = (
         tagged.groupBy(*key)

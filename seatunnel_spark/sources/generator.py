@@ -278,7 +278,7 @@ def write_fixture(
         tbl = pa.Table.from_pandas(chunk, schema=ev_schema, preserve_index=False)
         # same bounded-row-group discipline as the base file: byte-range
         # splits can only parallelize at row-group boundaries, and seq-range
-        # predicates (DDL segment bounds, the snapshot's seq < max_fence)
+        # predicates (start/stop offsets, the snapshot's seq < max_fence)
         # prune at row-group granularity
         pq.write_table(
             tbl, os.path.join(events_dir, f"chunk-{f:05d}.parquet"),

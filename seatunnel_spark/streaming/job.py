@@ -8,20 +8,21 @@ one incremental split starting at the recorded watermarks), re-expressed as:
            normalized initial state + per-chunk fences atomically;
   phase B  Structured Streaming over the event log with ``foreachBatch``:
            fence filter (shouldEmit, IncrementalSourceStreamFetcher:273-303)
-           → split the micro-batch at DDL offsets into ordered
-           sub-transactions (splitSchemaChangeStream:152-236, checkpoint
-           types SCHEMA_CHANGE_BEFORE/AFTER, CheckpointType.java:23-35)
-           → per segment: LWW reduce + MERGE commit with a deterministic
-           epoch id ``b{batch}.s{segment}`` → DDL applied as its own
-           metadata commit ``b{batch}.d{seq}``.
+           → each DDL applied as its own metadata commit ``b{batch}.d{seq}.{i}``
+           that records the seq at which it re-binds wire fields
+           → ONE LWW reduce + MERGE commit ``b{batch}.s0`` of the whole batch,
+           every event projected with the columns bound at its own seq. That
+           is the row set SeaTunnel's split at DDL offsets produces
+           (splitSchemaChangeStream:152-236, checkpoint types
+           SCHEMA_CHANGE_BEFORE/AFTER, CheckpointType.java:23-35) without a
+           merge job per segment.
 
 Exactly-once: Structured Streaming replays an unacknowledged micro-batch
-with the same batch_id after restart; segmentation is a pure function of the
-batch contents, so every sub-transaction re-derives the same epoch id and
-the lake's epoch ledger skips the ones already applied — SeaTunnel's
-checkpoint-ack + SinkAggregatedCommitter contract
-(CheckpointCoordinator.java:687-741, SinkFlowLifeCycle.java:155-241) without
-a coordinator process.
+with the same batch_id after restart; the epoch ids are a pure function of
+the batch contents, so every commit re-derives the same id and the lake's
+epoch ledger skips the ones already applied — SeaTunnel's checkpoint-ack +
+SinkAggregatedCommitter contract (CheckpointCoordinator.java:687-741,
+SinkFlowLifeCycle.java:155-241) without a coordinator process.
 
 Lineage + metrics (BASELINE requirement; reference metric names
 MetricNames.java:28-32, CDCRecordFetchDelay/EmitDelay
@@ -34,7 +35,6 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -115,20 +115,37 @@ def project_to_table_schema(table: LakeTable, events: DataFrame) -> DataFrame:
     by **column id** via the table's wire_bindings, so a renamed table column
     keeps receiving its original wire field — the same id-based binding
     Iceberg uses for files, applied to the stream.
+
+    A binding made by an ``add_column`` at seq ``s`` is live only for
+    ``seq > s``, and a binding whose wire name was re-bound at seq ``s``
+    only for ``seq <= s`` (``wire_bounds``, LakeTable.update_schema). So
+    one projection onto the batch's final schema is exact for every DDL
+    order: each event reads the columns as they were bound at its own seq.
+    The intervals are half-open ``(from, to]``: a DML event whose seq EQUALS
+    a DDL's seq applies before that DDL. The native log has unique seqs;
+    queue wires order by timestamp (canal ts / mongo clusterTime), where a
+    row and an ALTER can share a tick. Unbounded bindings project as the
+    plain wire column.
     """
-    id_to_wire = {v: k for k, v in table.meta["wire_bindings"].items()}
+    bound = {cid: (wire, None, None) for wire, cid in table.meta["wire_bindings"].items()}
+    for cid, b in table.meta.get("wire_bounds", {}).items():
+        bound[int(cid)] = (b["wire"], b["from"], b["to"])
     wire_cols = set(events.columns)
     cols = []
     for f in table.schema_fields():
-        wname = id_to_wire.get(f["id"])
-        if wname and wname in wire_cols:
-            cols.append(F.col(wname).cast(f["type"]).alias(f["name"]))
+        wname, lo, hi = bound.get(f["id"], (None, None, None))
+        if wname in wire_cols:
+            val = F.col(wname)
         elif wname and "extra" in wire_cols:
-            cols.append(
-                F.get_json_object(F.col("extra"), f"$.{wname}").cast(f["type"]).alias(f["name"])
-            )
+            val = F.get_json_object(F.col("extra"), f"$.{wname}")
         else:
             cols.append(F.lit(None).cast(f["type"]).alias(f["name"]))
+            continue
+        if lo is not None:
+            val = F.when(F.col("seq") > lo, val)
+        if hi is not None:
+            val = F.when(F.col("seq") <= hi, val)
+        cols.append(val.cast(f["type"]).alias(f["name"]))
     return events.select(*cols, "op", "seq")
 
 
@@ -155,7 +172,15 @@ class CdcIngestJob:
         row images. ``broker`` switches the queue transport from the
         file-backed stand-in to a real Kafka topic (sources/kafka.py option
         seam: bootstrap_servers/topic/start_mode...); everything downstream
-        of the first readStream line is identical."""
+        of the first readStream line is identical.
+
+        Seq-uniqueness contract: with 'parquet-events', ``seq`` in
+        ``events_dir`` is the log offset and must be unique across the whole
+        log (one event per offset, like a binlog position). The merge relies
+        on it to drop the LWW tie-break (``lww_reduce(unique_order=True)``);
+        two events of one key sharing a seq would both be committed. The
+        queue formats order by envelope timestamp, where ties are real, so
+        they keep the tie-break (``_unique_order`` is False)."""
         self.spark = spark
         self.table_root = table_root
         self.events_dir = events_dir
@@ -363,65 +388,9 @@ class CdcIngestJob:
             return q
         return writer.start()
 
-    # ------------------------------------------------- sequential segments
-    def _apply_segments(
-        self, table, dml_base, ddls, bounds, batch_lo, batch_hi, batch_id,
-        broadcast_winners: bool = False,
-    ) -> bool:
-        """DDL-offset sub-transactions, strictly in stream order — the
-        fallback when the batch's DDL sequence makes whole-batch projection
-        seq-dependent (drop + re-add of one column name; see _apply_batch).
-        Segments are half-open intervals (prev_ddl_seq, next_ddl_seq]: a DML
-        event with seq EQUAL to a DDL's seq applies before that DDL. The
-        native log has unique seqs so equality never happens there; queue
-        paths order by timestamp (canal ts / mongo clusterTime) where a row
-        and an ALTER can share a tick — strict bounds on both sides would
-        silently drop such rows from every segment."""
-        any_applied = False
-        for i in range(len(ddls) + 1):
-            seg = dml_base
-            seg_lo, seg_hi = batch_lo, batch_hi
-            if bounds[i] is not None:
-                seg = seg.where(F.col("seq") > bounds[i])
-                seg_lo = max(batch_lo, bounds[i] + 1) if batch_lo is not None else None
-            if bounds[i + 1] is not None:
-                seg = seg.where(F.col("seq") <= bounds[i + 1])
-                seg_hi = min(batch_hi, bounds[i + 1]) if batch_hi is not None else None
-            res = merge_into(
-                self.spark, table, project_to_table_schema(table, seg),
-                epoch_id=f"b{batch_id}.s{i}",
-                collect_stats=False,
-                extra_summary={"seq_min": seg_lo, "seq_max": seg_hi},
-                broadcast_winners=broadcast_winners,
-                unique_order=self._unique_order,
-            )
-            any_applied = any_applied or not res.get("skipped")
-            if i < len(ddls):
-                s, payload = ddls[i]
-                # epoch id carries the segment index too: on the queue paths
-                # seq is timestamp-derived, so two DDLs can share a seq — a
-                # seq-only id would treat the second as already applied.
-                # ddls is deterministically sorted by (seq, payload) so the
-                # index is stable across replays.
-                applied = table.update_schema(
-                    parse_change(payload), epoch_id=f"b{batch_id}.d{s}.{i}"
-                )
-                any_applied = any_applied or applied
-        return any_applied
-
     # ------------------------------------------------------- foreachBatch
     def _apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         t0 = time.time()
-        _prof = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
-
-        def _mark(label: str, since: float) -> float:
-            now = time.time()
-            if _prof:
-                print(f"PROF b{batch_id} {label}: {now - since:.3f}s",
-                      file=sys.stderr, flush=True)
-            return now
-
-        _t = t0
         table = LakeTable.load(self.table_root)
         fences = {int(b): int(w) for b, w in table.meta["properties"].get("fences", {}).items()}
         if getattr(self, "_start_seq", None) is not None:
@@ -430,12 +399,10 @@ class CdcIngestJob:
             batch = batch.where(F.col("seq") <= self._stop_seq)
 
         # The batch is never persisted: it is a parquet file set, so every
-        # pass is a pruned scan. Per batch exactly TWO kinds of passes run:
+        # pass is a pruned scan. Per batch exactly TWO passes run:
         #   1. one narrow metadata pass (no `content`) that produces the
         #      lineage rows, the applied-event count AND the DDL offsets;
-        #   2. the merge pass(es), which read the wide columns once, split
-        #      by seq-range predicates at DDL offsets (row-group pruning
-        #      keeps the total wide bytes ≈ one full pass).
+        #   2. one merge pass, which reads the wide columns once.
         is_ddl = F.col("op") == OP_DDL
         # Any bucket missing from the fence map falls back to fence 0 (emit):
         # `seq >= NULL` would be NULL and silently drop those events forever.
@@ -463,7 +430,6 @@ class CdcIngestJob:
             )
             .collect()
         )
-        _t = _mark("metadata_pass", _t)
         ddls = sorted(
             (d["seq"], d["ddl"])
             for r in meta_rows
@@ -473,94 +439,44 @@ class CdcIngestJob:
             # ignores DDL kinds it does not support)
             if d is not None and d["ddl"] is not None
         )
-
-        # --- DDL-offset sub-transactions (seq-bound predicates push down to
-        # parquet row groups; the log is seq-ordered, so each segment reads
-        # roughly its own bytes)
         seq_mins = [r["seq_min"] for r in meta_rows if r["seq_min"] is not None]
         seq_maxs = [r["seq_max"] for r in meta_rows if r["seq_max"] is not None]
         batch_lo = min(seq_mins) if seq_mins else None
         batch_hi = max(seq_maxs) if seq_maxs else None
-        # Segments are half-open intervals (prev_ddl_seq, next_ddl_seq]: a
-        # DML event with seq EQUAL to a DDL's seq applies before that DDL.
-        # The native log has unique seqs so equality never happens there;
-        # queue paths order by timestamp (canal ts / mongo clusterTime) where
-        # a row and an ALTER can share a tick — strict bounds on both sides
-        # would silently drop such rows from every segment.
-        bounds = [None] + [s for s, _ in ddls] + [None]
-        dml_base = batch.where(~is_ddl).where(fence_ok)
-        any_applied = False  # epoch guard: replayed batches must not re-append
 
-        # --- fused DDL+merge fast path: projection binds by COLUMN ID via
-        # wire_bindings (the wire schema never changes — project_to_table_
-        # schema), so projecting the WHOLE batch onto the post-DDL final
-        # schema is row-for-row identical to per-segment projection:
-        #   add_column  — pre-DDL events lack the wire field -> NULL either
-        #                 way (well-formed streams emit a field only after
-        #                 its DDL, the same contract a real binlog enforces);
-        #   rename      — id binding unchanged, same wire field read;
-        #   widen_type  — lossless cast either way;
-        #   drop_column — absent from the final schema either way;
-        # and global LWW by seq == sequential segment merges (a later
-        # segment's winner overrides an earlier one exactly as max-seq
-        # does). Schema updates are metadata-only, so applying them FIRST
-        # and then ONE merge of the whole batch commits the identical final
-        # state with O(1) merge jobs per batch instead of O(#DDLs) — at 4
-        # cores each extra segment job cost ~5s of non-parallelizing
-        # plan/schedule/commit time (PROF in BENCH.md round 6).
-        # The ONE sequence where projection IS seq-dependent: a wire name
-        # FREED within the batch (drop_column frees its name; rename_column
-        # frees its old_name) and then re-bound by add_column re-binds that
-        # wire field to a fresh column id, so pre-DDL events would leak
-        # their old values into the new column. Detect it and fall back to
-        # the sequential segment path — the set scan is deliberately
-        # conservative (a false positive only costs segment merges, never
-        # correctness).
-        # Tie-break note (queue paths): sequential segment merges resolved
-        # same-key same-seq rows by segment order (later merge wins), while
-        # the fused single lww_reduce tie-breaks by xxhash64(payload). On
-        # the native log seqs are unique so the paths are identical; on
-        # timestamp-ordered queue wires (canal ts / mongo clusterTime) two
-        # updates to one key in the same tick straddling a DDL may resolve
-        # to either image — both are valid serializations of a tie the
-        # source ordering itself does not define.
-        ddl_changes = [parse_change(p) for _, p in ddls]
-        freed: set[str] = set()
-        fusable = True
-        for ch in ddl_changes:
-            for c in ch.changes if ch.kind == "batch" else (ch,):
-                if c.kind == "drop_column":
-                    freed.add(c.name)
-                elif c.kind == "rename_column":
-                    freed.add(c.old_name)
-                elif c.kind == "add_column" and c.name in freed:
-                    fusable = False
+        # DDLs first, then ONE merge of the whole batch. Schema updates are
+        # metadata-only commits that record the seq at which each wire
+        # binding changes, so projecting every event onto the final schema
+        # reads each column as it was bound at that event's own seq
+        # (project_to_table_schema) — the same rows SeaTunnel's split at DDL
+        # offsets produces (splitSchemaChangeStream), with O(1) merge jobs
+        # per batch instead of O(#DDLs). A replay that finds the DDL epochs
+        # already committed projects identically: the bounds live in table
+        # metadata, not in this batch.
+        any_applied = False  # epoch guard: replayed batches must not re-append
+        for i, (s, payload) in enumerate(ddls):
+            # epoch id carries the DDL's index too: on the queue paths seq is
+            # timestamp-derived, so two DDLs can share a seq — a seq-only id
+            # would treat the second as already applied. ddls is sorted by
+            # (seq, payload), so the index is stable across replays.
+            applied = table.update_schema(
+                parse_change(payload), epoch_id=f"b{batch_id}.d{s}.{i}", seq=s
+            )
+            any_applied = any_applied or applied
         # the metadata pass already counted the batch: gate the winner
         # broadcast on its exact event count (see __init__ docstring)
         n_batch_events = int(sum(r["n_events"] for r in meta_rows))
-        bw = 0 < n_batch_events <= self.broadcast_winners_max_events
-        if fusable:
-            for i, (s, _) in enumerate(ddls):
-                applied = table.update_schema(
-                    ddl_changes[i], epoch_id=f"b{batch_id}.d{s}.{i}"
-                )
-                any_applied = any_applied or applied
-            res = merge_into(
-                self.spark, table, project_to_table_schema(table, dml_base),
-                epoch_id=f"b{batch_id}.s0",
-                collect_stats=False,
-                extra_summary={"seq_min": batch_lo, "seq_max": batch_hi},
-                broadcast_winners=bw,
-                unique_order=self._unique_order,
-            )
-            any_applied = any_applied or not res.get("skipped")
-        else:
-            any_applied = self._apply_segments(
-                table, dml_base, ddls, bounds, batch_lo, batch_hi, batch_id,
-                broadcast_winners=bw,
-            )
+        dml = batch.where(~is_ddl).where(fence_ok)
+        res = merge_into(
+            self.spark, table, project_to_table_schema(table, dml),
+            epoch_id=f"b{batch_id}.s0",
+            collect_stats=False,
+            extra_summary={"seq_min": batch_lo, "seq_max": batch_hi},
+            broadcast_winners=0 < n_batch_events <= self.broadcast_winners_max_events,
+            unique_order=self._unique_order,
+        )
+        any_applied = any_applied or not res.get("skipped")
 
-        _t = _mark("merge_segments", _t)
         # A fully-replayed batch (every sub-epoch already in the ledger) must
         # not duplicate lineage/metrics rows or double-count events_applied —
         # the exactly-once contract covers the side tables too.
@@ -587,7 +503,7 @@ class CdcIngestJob:
             "lineage",
         )
 
-        applied = int(sum(r["n_events"] for r in meta_rows)) + len(ddls)
+        applied = n_batch_events + len(ddls)
         self._events_applied += applied
         # CDCRecordFetchDelay / CDCRecordEmitDelay parity: delay of the
         # batch's freshest event at fetch start (t0) and at commit (now).
@@ -610,7 +526,6 @@ class CdcIngestJob:
             fetch_delay_ms=fetch_delay_ms,
             emit_delay_ms=emit_delay_ms,
         )
-        _mark("side_tables", _t)
 
     # ------------------------------------------------------------ metrics views
     def metrics_compat(self) -> DataFrame:

@@ -8,7 +8,8 @@ Spark realization: the wire stream carries a ``_table`` column (the
 debezium/canal parsers in sources/formats.py emit it); ``foreachBatch``
 routes each table's slice to its own LakeTable with per-(batch, table)
 epoch ids, so the multi-table commit set is idempotent exactly like the
-single-table path.
+single-table path. A slice's DDLs commit first with their seqs, then the
+slice merges once — one data epoch per (batch, table), whatever the DDLs.
 
 Two routing layouts:
 - few tables (default): a filter per table — each slice scan prunes on the
@@ -66,11 +67,11 @@ class MultiTableRouter:
         tables). Returns per-table merge stats.
 
         DDL events (op='DDL') in the stream are routed to their table's
-        update_schema at the correct offset: each table's slice is split at
-        its DDL seqs into ordered sub-transactions exactly like the
-        single-table job (half-open (prev, next] segments, deterministic
-        epoch ids) — a DDL row must NEVER reach a merge, where its null key
-        would land as a junk row."""
+        update_schema with their seqs, then the table's slice merges once,
+        exactly like the single-table job: the seq-bounded wire bindings
+        give every event the columns bound at its own offset
+        (project_to_table_schema). A DDL row must NEVER reach a merge, where
+        its null key would land as a junk row."""
         results: dict[str, dict] = {}
         # ONE pass over the batch collects every table's DDL events (rare,
         # tiny) — not a per-table job; tables not in this dict have none.
@@ -112,35 +113,19 @@ class MultiTableRouter:
         from seatunnel_spark.schema import parse_change
         from seatunnel_spark.streaming.job import project_to_table_schema
 
+        epoch_id = f"b{batch_id}.t.{name}"
         if "ddl" not in slice_df.columns:
-            return merge_into(
-                self.spark, table, slice_df,
-                epoch_id=f"b{batch_id}.t.{name}", collect_stats=False,
+            return merge_into(self.spark, table, slice_df, epoch_id=epoch_id,
+                              collect_stats=False)
+        for i, (s, payload) in enumerate(ddls):
+            table.update_schema(
+                parse_change(payload), epoch_id=f"{epoch_id}.d{s}.{i}", seq=s
             )
         dml = slice_df.where(F.col("op") != "DDL")
-        if not ddls:
-            return merge_into(
-                self.spark, table, project_to_table_schema(table, dml),
-                epoch_id=f"b{batch_id}.t.{name}", collect_stats=False,
-            )
-        bounds = [None] + [s for s, _ in ddls] + [None]
-        last = {}
-        for i in range(len(ddls) + 1):
-            seg = dml
-            if bounds[i] is not None:
-                seg = seg.where(F.col("seq") > bounds[i])
-            if bounds[i + 1] is not None:
-                seg = seg.where(F.col("seq") <= bounds[i + 1])
-            last = merge_into(
-                self.spark, table, project_to_table_schema(table, seg),
-                epoch_id=f"b{batch_id}.t.{name}.s{i}", collect_stats=False,
-            )
-            if i < len(ddls):
-                s, payload = ddls[i]
-                table.update_schema(
-                    parse_change(payload), epoch_id=f"b{batch_id}.t.{name}.d{s}.{i}"
-                )
-        return last
+        return merge_into(
+            self.spark, table, project_to_table_schema(table, dml),
+            epoch_id=epoch_id, collect_stats=False,
+        )
 
     def run_stream(self, stream: DataFrame, checkpoint_dir: str,
                    available_now: bool = True, timeout_s: float | None = None):

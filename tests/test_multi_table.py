@@ -271,3 +271,50 @@ def test_multi_table_ddl_routes_on_debezium_too(spark, tmp_path):
     assert got_a == {"a.py": ("v3", 42)}
     got_b = {r["path"]: r["content"] for r in b.scan(spark).collect()}
     assert got_b == {"b.py": "v2"}
+
+
+def test_multi_table_drop_readd_one_data_epoch_per_table(spark, tmp_path):
+    """A slice whose DDLs drop and re-add one column name still merges ONCE:
+    one data epoch per table per batch. The re-added column reads its wire
+    field only after the add's seq, so alpha's pre-drop stars=7 stays dead;
+    beta (no DDL) is untouched. Replaying the batch commits nothing."""
+    import json as _json
+
+    from seatunnel_spark.schema import SchemaChange
+
+    fields = REPO_FIELDS + [("stars", "int")]
+    tables = {
+        name: LakeTable.create(str(tmp_path / name), fields, REPO_KEY, num_buckets=2)
+        for name in ("alpha", "beta")
+    }
+    drop = SchemaChange(kind="drop_column", name="stars").to_json()
+    readd = SchemaChange(kind="add_column", name="stars", type="bigint").to_json()
+    batch = spark.createDataFrame(
+        [
+            ("alpha", 1, "I", "o/r", "a.py", "c0", "py", "v0", None, _json.dumps({"stars": "7"})),
+            ("beta", 2, "I", "o/r", "z.py", "c0", "py", "vz", None, _json.dumps({"stars": "5"})),
+            ("alpha", 3, "DDL", None, None, None, None, None, drop, None),
+            ("alpha", 4, "DDL", None, None, None, None, None, readd, None),
+            ("alpha", 5, "I", "o/r", "b.py", "c1", "py", "v1", None, _json.dumps({"stars": "9"})),
+        ],
+        "_table string, seq long, op string, repo string, path string, commit string, "
+        "lang string, content string, ddl string, extra string",
+    )
+    router = MultiTableRouter(spark, tables)
+    router.apply_batch(batch, 0)
+
+    a = LakeTable.load(str(tmp_path / "alpha"))
+    b = LakeTable.load(str(tmp_path / "beta"))
+    assert [e for e in a.meta["epochs"] if ".d" not in e] == ["b0.t.alpha"]
+    assert sorted(e for e in a.meta["epochs"] if ".d" in e) == [
+        "b0.t.alpha.d3.0", "b0.t.alpha.d4.1"]
+    assert list(b.meta["epochs"]) == ["b0.t.beta"]
+    got_a = {r["path"]: r["stars"] for r in a.scan(spark).collect()}
+    got_b = {r["path"]: r["stars"] for r in b.scan(spark).collect()}
+    assert got_a == {"a.py": None, "b.py": 9}
+    assert got_b == {"z.py": 5}
+
+    versions = (a.version, b.version)
+    router.apply_batch(batch, 0)
+    a.refresh(); b.refresh()
+    assert (a.version, b.version) == versions

@@ -28,6 +28,25 @@ def _batch_df(spark, rows):
     )
 
 
+EVENT_COLUMNS = ["seq", "txn_id", "op", "repo", "path", "commit", "lang",
+                 "content", "ddl", "extra"]
+
+
+def _write_events(spark, events_dir, rows):
+    """One parquet event file from (seq, txn, op, repo, path, commit, lang,
+    content, ddl, extra) tuples; ts is EPOCH0 + seq seconds."""
+    ev = pd.DataFrame(rows, columns=EVENT_COLUMNS)
+    ev["ts"] = pd.Timestamp(gen.EPOCH0) + pd.to_timedelta(ev["seq"], unit="s")
+    spark.createDataFrame(ev, event_schema()).coalesce(1).write.parquet(
+        str(events_dir), mode="overwrite"
+    )
+    return ev
+
+
+def _data_epochs(table):
+    return [e for e in table.meta["epochs"] if ".s" in e and not e.endswith(".compact")]
+
+
 @pytest.fixture()
 def table(tmp_path):
     return LakeTable.create(str(tmp_path / "t"), REPO_FIELDS, REPO_KEY, num_buckets=4)
@@ -139,48 +158,32 @@ def test_batch_ddl_through_the_stream(spark, tmp_path):
     assert got["a.py"]["content"] == "v1"
 
 
-def test_rename_then_add_freed_name_falls_back_to_segments(spark, tmp_path):
+def test_rename_then_add_freed_name_takes_fused_path(spark, tmp_path):
     """A batch holding `rename commit->commit_sha` then `add_column commit`
-    re-binds wire field 'commit' to the NEW column id. The fused whole-batch
-    projection would bind PRE-rename rows' 'commit' values to the new column
-    (and null out commit_sha) — the fusable scan must treat a rename's
-    old_name as freed and fall back to sequential segment merges, which keep
-    the pre-rename value in the renamed column."""
+    re-binds wire field 'commit' to the NEW column id. It still commits one
+    data epoch: the old id's binding ends at the add's seq and the new id's
+    starts after it, so the pre-rename value lives in the renamed column and
+    the re-added 'commit' column holds nothing for pre-DDL rows."""
     root = str(tmp_path / "t")
     LakeTable.create(root, REPO_FIELDS, REPO_KEY, num_buckets=2)
     rename = SchemaChange(
         kind="rename_column", old_name="commit", name="commit_sha"
     ).to_json()
     add = SchemaChange(kind="add_column", name="commit", type="string").to_json()
-    rows = [
-        # seq, txn, op, repo, path, commit, lang, content, ddl, extra
+    _write_events(spark, tmp_path / "events", [
         (0, 0, "I", "o/r1", "a.py", "c0", "py", "v0", None, None),
         (1, 0, "DDL", None, None, None, None, None, rename, None),
         (2, 0, "DDL", None, None, None, None, None, add, None),
-    ]
-    ev = pd.DataFrame(
-        rows,
-        columns=["seq", "txn_id", "op", "repo", "path", "commit", "lang",
-                 "content", "ddl", "extra"],
-    )
-    ev["ts"] = pd.Timestamp(gen.EPOCH0) + pd.to_timedelta(ev["seq"], unit="s")
-    events_dir = str(tmp_path / "events")
-    import os
-
-    os.makedirs(events_dir)
-    spark.createDataFrame(ev, event_schema()).coalesce(1).write.parquet(
-        events_dir, mode="overwrite"
-    )
-    job = CdcIngestJob(spark, root, events_dir, str(tmp_path / "c"), num_buckets=2)
+    ])
+    job = CdcIngestJob(spark, root, str(tmp_path / "events"), str(tmp_path / "c"),
+                       num_buckets=2)
     job.run_incremental(available_now=True, timeout_s=300)
 
     table = LakeTable.load(root)
+    assert _data_epochs(table) == ["b0.s0"]
     names = [f["name"] for f in table.schema_fields()]
     assert "commit_sha" in names and "commit" in names
     got = {r["path"]: r for r in table.scan(spark).collect()}
-    # sequential-segment semantics: the pre-rename value lives in the
-    # RENAMED column; the re-added 'commit' column holds nothing for
-    # pre-DDL rows
     assert got["a.py"]["commit_sha"] == "c0"
     assert got["a.py"]["commit"] is None
     assert got["a.py"]["content"] == "v0"
@@ -510,48 +513,99 @@ def test_index_ddl_through_canal_stream_is_noop(spark, tmp_path):
     assert [f["name"] for f in t.schema_fields()] == [n for n, _ in REPO_FIELDS]
 
 
-def test_drop_readd_same_column_takes_sequential_path(spark, tmp_path):
-    """The fused DDL+merge fast path (job._apply_batch) projects the whole
-    batch onto the post-DDL final schema — row-identical to sequential
-    segment merges for every DDL sequence EXCEPT drop+re-add of one column
-    name, which re-binds that wire name to a fresh column id. That batch
-    must fall back to stream-order segment merges: a key whose last event
-    precedes the drop must show NULL in the re-added column (its old value
-    died with the dropped column id), never a leaked resurrection."""
-    import os
+DROP_STARS = SchemaChange(kind="drop_column", name="stars")
+READD_STARS = SchemaChange(kind="add_column", name="stars", type="bigint")
+DROP_READD_ROWS = [
+    # a.py's LAST event precedes the drop and carries stars=7
+    (1, 0, "I", "o/r", "a.py", "c0", "py", "v0", None, json.dumps({"stars": "7"})),
+    (2, 0, "DDL", None, None, None, None, None, DROP_STARS.to_json(), None),
+    (3, 1, "DDL", None, None, None, None, None, READD_STARS.to_json(), None),
+    (4, 1, "I", "o/r", "b.py", "c1", "py", "v1", None, json.dumps({"stars": "9"})),
+]
 
-    from seatunnel_spark.schema import OP_DDL  # noqa: F401 (parity import)
 
-    fields = REPO_FIELDS + [("stars", "int")]
+def test_drop_readd_same_column_takes_fused_path(spark, tmp_path):
+    """Drop + re-add of one column name re-binds that wire name to a fresh
+    column id within the batch. The batch still commits ONE data epoch: the
+    new id reads the wire field only after its add_column seq, so a key
+    whose last event precedes the drop shows NULL in the re-added column
+    (its old value died with the dropped column id), never a leaked
+    resurrection."""
     root = str(tmp_path / "t")
-    t = LakeTable.create(root, fields, REPO_KEY, num_buckets=2)
+    t = LakeTable.create(root, REPO_FIELDS + [("stars", "int")], REPO_KEY, num_buckets=2)
     assert "stars" in [f["name"] for f in t.schema_fields()]
-
-    drop = SchemaChange(kind="drop_column", name="stars").to_json()
-    readd = SchemaChange(kind="add_column", name="stars", type="bigint").to_json()
-    rows = [
-        # a.py's LAST event precedes the drop and carries stars=7
-        (1, 0, "I", "o/r", "a.py", "c0", "py", "v0", None,
-         json.dumps({"stars": "7"})),
-        (2, 0, "DDL", None, None, None, None, None, drop, None),
-        (3, 1, "DDL", None, None, None, None, None, readd, None),
-        (4, 1, "I", "o/r", "b.py", "c1", "py", "v1", None,
-         json.dumps({"stars": "9"})),
-    ]
-    ev = pd.DataFrame(rows, columns=["seq", "txn_id", "op", "repo", "path",
-                                     "commit", "lang", "content", "ddl", "extra"])
-    ev["ts"] = pd.Timestamp(gen.EPOCH0) + pd.to_timedelta(ev["seq"], unit="s")
-    events_dir = str(tmp_path / "ev")
-    os.makedirs(events_dir)
-    spark.createDataFrame(ev, event_schema()).coalesce(1).write.parquet(
-        events_dir, mode="overwrite")
-    job = CdcIngestJob(spark, root, events_dir, str(tmp_path / "c"), num_buckets=2)
+    _write_events(spark, tmp_path / "ev", DROP_READD_ROWS)
+    job = CdcIngestJob(spark, root, str(tmp_path / "ev"), str(tmp_path / "c"),
+                       num_buckets=2)
     job.run_incremental(available_now=True, timeout_s=300)
 
-    got = {r["path"]: r for r in LakeTable.load(root).scan(spark).collect()}
+    t = LakeTable.load(root)
+    assert _data_epochs(t) == ["b0.s0"]
+    got = {r["path"]: r for r in t.scan(spark).collect()}
     # pre-drop value must NOT resurrect into the re-added (new-id) column
     assert got["a.py"]["stars"] is None
     assert got["b.py"]["stars"] == 9
+
+
+def test_replay_after_ddl_commits_keeps_pre_drop_value_dead(spark, tmp_path):
+    """The crash window of "DDLs first, then one merge": a run committed the
+    batch's drop and re-add epochs and died before its merge. The replayed
+    batch finds both DDLs already applied; the seq bounds they recorded in
+    table metadata must still keep a.py's pre-drop stars=7 out of the
+    re-added column."""
+    root = str(tmp_path / "t")
+    t = LakeTable.create(root, REPO_FIELDS + [("stars", "int")], REPO_KEY, num_buckets=2)
+    _write_events(spark, tmp_path / "ev", DROP_READD_ROWS)
+    # epoch ids as the job derives them: b{batch}.d{seq}.{index}
+    assert t.update_schema(DROP_STARS, "b0.d2.0", seq=2)
+    assert t.update_schema(READD_STARS, "b0.d3.1", seq=3)
+    job = CdcIngestJob(spark, root, str(tmp_path / "ev"), str(tmp_path / "c"),
+                       num_buckets=2)
+    job.run_incremental(available_now=True, timeout_s=300)
+
+    t = LakeTable.load(root)
+    assert _data_epochs(t) == ["b0.s0"]
+    assert sorted(e for e in t.meta["epochs"] if ".d" in e) == ["b0.d2.0", "b0.d3.1"]
+    got = {r["path"]: r for r in t.scan(spark).collect()}
+    assert got["a.py"]["stars"] is None
+    assert got["b.py"]["stars"] == 9
+
+
+def test_field_before_its_add_column_lands_null(spark, tmp_path):
+    """An event BEFORE `add_column stars` that already carries `stars` must
+    land NULL: the column does not exist at that event's offset (segment
+    and oracle semantics). An event after the add keeps its value."""
+    root = str(tmp_path / "t")
+    LakeTable.create(root, REPO_FIELDS, REPO_KEY, num_buckets=2)
+    add = SchemaChange(kind="add_column", name="stars", type="int").to_json()
+    ev = _write_events(spark, tmp_path / "ev", [
+        (1, 0, "I", "o/r", "a.py", "c0", "py", "v0", None, json.dumps({"stars": "7"})),
+        (2, 0, "DDL", None, None, None, None, None, add, None),
+        (3, 1, "I", "o/r", "b.py", "c1", "py", "v1", None, json.dumps({"stars": "9"})),
+    ])
+    job = CdcIngestJob(spark, root, str(tmp_path / "ev"), str(tmp_path / "c"),
+                       num_buckets=2)
+    job.run_incremental(available_now=True, timeout_s=300)
+
+    t = LakeTable.load(root)
+    assert _data_epochs(t) == ["b0.s0"]
+    got = {r["path"]: r["stars"] for r in t.scan(spark).collect()}
+    assert got == {"a.py": None, "b.py": 9}
+    expected, _ = oracle.replay(pd.DataFrame(columns=[n for n, _ in REPO_FIELDS]), ev)
+    assert {r.path: (None if pd.isna(r.stars) else r.stars)
+            for r in expected.itertuples()} == got
+
+
+def test_unique_order_only_for_the_native_log(spark, tmp_path):
+    """The merge drops its LWW tie-break only where seq is the unique log
+    offset (parquet-events); timestamp-ordered queue wires keep it."""
+    def job(fmt):
+        return CdcIngestJob(spark, str(tmp_path / "t"), str(tmp_path / "ev"),
+                            str(tmp_path / "c"), wire_format=fmt)
+
+    assert job("parquet-events")._unique_order is True
+    assert job("debezium-json")._unique_order is False
+    assert job("canal-json")._unique_order is False
 
 
 def test_fused_path_one_merge_epoch_per_batch(spark, tmp_path):
@@ -585,8 +639,7 @@ def test_fused_path_one_merge_epoch_per_batch(spark, tmp_path):
     job.run_incremental(available_now=True, timeout_s=300)
 
     t = LakeTable.load(root)
-    data_epochs = [e for e in t.meta["epochs"] if ".s" in e and not e.endswith(".compact")]
-    assert data_epochs == ["b0.s0"], data_epochs
+    assert _data_epochs(t) == ["b0.s0"]
     ddl_epochs = sorted(e for e in t.meta["epochs"] if ".d" in e)
     assert len(ddl_epochs) == 2, ddl_epochs
     got = {r["path"]: r for r in t.scan(spark).collect()}
