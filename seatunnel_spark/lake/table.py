@@ -23,16 +23,19 @@ implements those semantics directly:
   files written under an old schema are aligned at scan time by id
   (rename/null-fill/cast), so no data rewrite on DDL — Iceberg's documented
   evolution model, mirroring AlterTableEventHandler.java:53-163.
-- **Hash-bucket layout**: data files live under ``bucket=K`` directories,
-  K = pmod(xxhash64(key), num_buckets). MERGE rewrites only affected buckets
-  (copy-on-write at bucket granularity). At 100 TB the bucket count is the
-  rewrite-amplification knob; a merge-on-read delete-file variant is the
-  known next step, noted in merge.py.
+- **Hash-bucket layout, merge-on-read**: data files live under
+  ``bucket=K`` directories, K = pmod(hash(key), num_buckets) (xxhash64 for
+  tables created before ``bucket_fn`` was recorded). A MERGE appends one
+  LWW-reduced delta file per touched bucket; ``scan`` reduces each
+  bucket's file stack by key at read time, and compaction (merge.py) folds
+  a deep stack back into one file.
 
-Scale notes: metadata holds per-bucket file lists for the *current* snapshot
-plus an epoch ledger; at 10^10 events with 5 s checkpoints that is a few MB
-of JSON — beyond that, Iceberg splits manifests per bucket, and this format
-has the same seam (bucket_files could point at side manifest files).
+Scale notes: every commit writes a full metadata version that retains up
+to 50 snapshots, each with the complete ``bucket_files`` of every bucket,
+plus an epoch ledger that is never pruned, so the version file grows with
+history and bucket count. Iceberg bounds the same cost with manifests that
+record only added and removed files; this format has that seam
+(bucket_files could point at side manifest files).
 """
 
 from __future__ import annotations
@@ -43,7 +46,7 @@ import os
 import re
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -284,9 +287,7 @@ class LakeTable:
             parts.append(compacted)
         layered = self._read_aligned(spark, multi_files, cur)
         if layered is not None:
-            from seatunnel_spark.operators.dedup import lww_reduce
-
-            parts.append(lww_reduce(layered, self.key, "_seq"))
+            parts.append(self._stack_reduce(layered))
 
         if not parts:
             return finish(spark.createDataFrame([], empty_schema))
@@ -294,6 +295,27 @@ class LakeTable:
         for p in parts[1:]:
             out = out.unionByName(p)
         return finish(out)
+
+    def _stack_reduce(self, layered: DataFrame) -> DataFrame:
+        """LWW across a bucket's file stack: per key the row with the max
+        ``_seq``, ties to the max xxhash64 of the other columns — the
+        survivor rule of ``lww_reduce``'s tie-broken semi-join, as one
+        window over one exchange. Every data file holds at most one row per
+        key, so a window partition is at most a stack deep: no hot key can
+        pile up in it (change batches can have hot keys, which is why the
+        merge keeps the map-side-combining aggregate). Rows with a null key
+        or ``_seq`` are dropped, as the semi-join's equi-join drops them."""
+        key = self.key
+        payload = [c for c in layered.columns if c not in key and c != "_seq"]
+        w = Window.partitionBy(*key).orderBy(
+            F.col("_seq").desc(), F.xxhash64(*payload).desc()
+        )
+        return (
+            layered.dropna(subset=[*key, "_seq"])
+            .withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1)
+            .drop("_rn")
+        )
 
     def _read_aligned(self, spark: SparkSession, files: list[dict], cur: list[dict]):
         """Read data files grouped by writer schema, aligned to the current

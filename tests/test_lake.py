@@ -186,6 +186,47 @@ def test_single_exchange_merge_plan(spark, table, tmp_path):
     assert all(len(fs) == 1 for fs in snap["bucket_files"].values())
 
 
+def test_stack_scan_plan_is_one_window_over_one_exchange(spark, table):
+    """The merge-on-read read path: buckets holding a 3-file stack under 3
+    schema ids are LWW-reduced by one window — exactly one exchange, no
+    join, and each schema group's files read by one parquet scan (a reducer
+    copied into every branch of the union reads every file again)."""
+
+    def batch(seq0, commit_col="commit", extra=()):
+        return spark.range(200).selectExpr(
+            "concat('o/r', id % 150 % 7) AS repo", "concat('p', id % 150) AS path",
+            f"'c{seq0}' AS {commit_col}", "'py' AS lang",
+            f"concat('v', id + {seq0}) AS content", *extra,
+            "IF(id % 9 = 0, 'D', 'U') AS op", f"id + {seq0} AS seq",
+        )
+
+    merge_into(spark, table, batch(0), "e1")
+    table.update_schema(
+        SchemaChange(kind="rename_column", old_name="commit", name="commit_sha"), "d1"
+    )
+    merge_into(spark, table, batch(1000, "commit_sha"), "e2")
+    table.update_schema(SchemaChange(kind="add_column", name="stars", type="int"), "d2")
+    merge_into(spark, table, batch(2000, "commit_sha", ["7 AS stars"]), "e3")
+
+    snap = table.refresh().current_snapshot()
+    stacks = snap["bucket_files"].values()
+    assert len(stacks) == table.num_buckets and all(len(fs) >= 3 for fs in stacks)
+    schema_groups = {f["schema_id"] for fs in stacks for f in fs}
+    assert len(schema_groups) == 3
+
+    scan = table.scan(spark, include_meta=True)
+    plan = scan._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "Join" not in plan, plan
+    assert plan.count("FileScan parquet") == len(schema_groups), plan
+    # the last batch rewrote every key: its LWW winners are the whole state
+    want = {}
+    for i in range(200):
+        want[f"p{i % 150}"] = (2000 + i, "D" if i % 9 == 0 else "U", 7)
+    got = {r["path"]: (r["_seq"], r["_op"], r["stars"]) for r in scan.collect()}
+    assert got == want
+
+
 def test_time_travel_scan(spark, table):
     merge_into(spark, table, _batch(spark, ROWS1), "e1")
     v1 = table.refresh().meta["current_snapshot_id"]

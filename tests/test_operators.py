@@ -853,3 +853,27 @@ def test_lww_reduce_unique_order_parity(spark):
             )
             assert got == expect, (bp, bw)
     assert len(expect) == 3 and {r["content"] for r in expect} == {"c", "y", "z"}
+
+
+def test_lww_reduce_duplicate_seq_contract(spark):
+    """Duplicate (key, seq) rows with different payloads. The default path
+    collapses them to ONE row — the max xxhash64(payload), the same on every
+    distribution. ``unique_order=True`` trusts seq to be unique and keeps
+    both: a log that breaks that contract commits two rows for the key."""
+    rows = [("k1", 4, "a"), ("k1", 4, "b"), ("k1", 2, "c"), ("k2", 9, "x")]
+    df = spark.createDataFrame(rows, "k string, seq long, content string")
+    h = {
+        r["content"]: r["h"]
+        for r in df.select("content", F.xxhash64("content").alias("h")).collect()
+    }
+    tie_winner = max(("a", "b"), key=h.get)
+    for bp in (None, 4):
+        for bw in (False, True):
+            kw = dict(strategy="semi_join", bucket_partitions=bp, broadcast_winners=bw)
+            got = sorted(tuple(r) for r in lww_reduce(df, ["k"], "seq", **kw).collect())
+            assert got == [("k1", 4, tie_winner), ("k2", 9, "x")], (bp, bw)
+            kept = sorted(
+                tuple(r)
+                for r in lww_reduce(df, ["k"], "seq", unique_order=True, **kw).collect()
+            )
+            assert kept == [("k1", 4, "a"), ("k1", 4, "b"), ("k2", 9, "x")], (bp, bw)
